@@ -71,10 +71,13 @@ def rank_postings(hits: DataFrame, terms: list[str], n_docs: int,
     """Shared scoring tail: posting rows for the query's terms →
     per-doc tf·ln(N/df) score (fixed-point basis points), ANY/ALL
     semantics, top-k. Shuffle volume is bounded by the queried terms'
-    posting rows, never the corpus."""
-    df_per_term = hits.groupBy("term").agg(
-        F.countDistinct("doc_id").alias("df")
-    )
+    posting rows, never the corpus.
+
+    Precondition: ``hits`` holds at most one row per (term, doc_id), as
+    ``build_posting_table`` emits. A term's document frequency is then
+    its row count, so ``df`` is one ``count(1)`` aggregation, not a
+    distinct aggregation."""
+    df_per_term = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         hits.join(F.broadcast(df_per_term), "term")
         .withColumn(

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from starrocks_spark.queries._util import sort_result
+
 
 def profile(df: DataFrame) -> DataFrame:
     """Execute ``df`` and return one row per (operator, metric): node
@@ -77,5 +79,5 @@ def profile_summary(df: DataFrame) -> DataFrame:
             F.max(F.when(F.col("metric").contains("spill"),
                          F.col("value"))).alias("spill_bytes"),
         )
-        .orderBy("node_id")
+        .transform(sort_result, "node_id")
     )

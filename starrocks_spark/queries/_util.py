@@ -79,6 +79,32 @@ def maybe_broadcast(df, scaling: bool = True):
     return F.broadcast(df) if not scaling else df
 
 
+def sort_result(df, *cols):
+    """Final ORDER BY of a result the caller collects, sorted in one
+    partition: ``df.repartition(1).orderBy(*cols)``.
+
+    A plain global ``orderBy`` plans a ``rangepartitioning`` exchange,
+    and Spark's RangePartitioner runs a separate sampling job over the
+    whole input before the map stage evaluates that input again — every
+    upstream operator (a ``mapInPandas`` included) runs twice. A
+    ``SinglePartition`` child already satisfies the sort's ordered
+    distribution, so this plans ``Sort <- Exchange SinglePartition``:
+    the upstream stays parallel, is evaluated once, and no sampling job
+    runs. The reference gathers a top-level ORDER BY the same way, via
+    one merging exchange at the result node.
+
+    Contract: only for the FINAL sort of a result that the caller
+    collects. Such a result must already fit in the collecting process,
+    so sorting it in one task costs no more than the collect does. A sort
+    whose output is written to storage, or feeds further parallel
+    work, keeps ``orderBy``; ``orderBy(...).limit(k)`` keeps it too
+    (it plans ``TakeOrderedAndProject``, which samples nothing), and so
+    does a sort whose input is already one partition (a union of
+    global aggregates): it plans no range exchange, and the explicit
+    repartition here would add a shuffle."""
+    return df.repartition(1).orderBy(*cols)
+
+
 def fixed(col: Column, scale: int = 4) -> Column:
     """Round-half-up to fixed-point integer via pure IEEE double math."""
     return F.floor(col * F.lit(float(10**scale)) + F.lit(0.5)).cast("decimal(38,0)")

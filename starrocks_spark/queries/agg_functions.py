@@ -33,7 +33,8 @@ from starrocks_spark.operators.aggregates import (
     state_merge_agg,
     sum_map,
 )
-from starrocks_spark.queries._util import dsum, maybe_broadcast, sql_dsum
+from starrocks_spark.queries._util import (dsum, maybe_broadcast, sort_result,
+                                            sql_dsum)
 
 
 # ------------------------------------------------------------ group_concat
@@ -603,7 +604,7 @@ def agg_corr_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment", "n",
         cov_s.alias("covar_samp"),
         corr.alias("pearson_r"),
-    ).orderBy("c_mktsegment")
+    ).transform(sort_result, "c_mktsegment")
 
 
 _CORR_SQL = f"""

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import (dsum, fixed, lit_frame, maybe_broadcast,
-                                            sql_dsum, sql_fixed)
+                                            sort_result, sql_dsum, sql_fixed)
 
 
 def _wsum(col, window, scale: int = 4):
@@ -353,7 +353,7 @@ def subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return matched.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("order_count")
-    ).orderBy("o_orderpriority")
+    ).transform(sort_result, "o_orderpriority")
 
 
 _SUBQUERY_EXISTS_SQL = """
@@ -378,7 +378,7 @@ def subquery_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("idle_customers"))
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 
@@ -425,9 +425,11 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(SUM(CAST(FLOOR((o_totalprice) * 10000.0 + 0.5) AS DECIMAL(38,0)))"
         " AS DOUBLE) / 10000.0 / COUNT(o_totalprice)"
     )
+    # REPARTITION(1): the final ORDER BY sorts in one partition, with
+    # no range-sampling job (see queries/_util.py sort_result)
     return spark.sql(
         f"""
-        SELECT o_orderstatus, COUNT(*) AS big_orders
+        SELECT /*+ REPARTITION(1) */ o_orderstatus, COUNT(*) AS big_orders
         FROM orders
         WHERE o_totalprice > (SELECT {avg_expr} FROM orders)
         GROUP BY o_orderstatus
@@ -538,7 +540,7 @@ def case_when_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("cnt"),
             F.count_if(F.col("o_orderstatus") == "O").alias("open_cnt"),
         )
-        .orderBy("price_bucket")
+        .transform(sort_result, "price_bucket")
     )
 
 
@@ -586,7 +588,7 @@ def values_inline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(flags), F.col("l_returnflag") == F.col("flag"))
         .groupBy("flag_desc")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("flag_desc")
+        .transform(sort_result, "flag_desc")
     )
 
 
@@ -612,7 +614,7 @@ def distinct_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("cnt"),
             dsum(F.col("o_totalprice")).alias("total"),
         )
-        .orderBy("o_orderstatus")
+        .transform(sort_result, "o_orderstatus")
     )
 
 
@@ -700,7 +702,7 @@ def window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.first("p", ignorenulls=True).over(wf).alias("first_nn"),
         F.last("p", ignorenulls=True).over(wf).alias("last_nn"),
         F.lag("p", 1, None).over(w).alias("prev_any"),
-    ).orderBy("o_custkey", "o_orderkey")
+    ).transform(sort_result, "o_custkey", "o_orderkey")
 
 
 _IGNORE_NULLS_SQL = """

@@ -105,8 +105,10 @@ def bitmap_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's R files (be/src/exprs/bitmap_functions.cpp)."""
     from starrocks_spark.plans.dialect import starrocks_sql
 
+    # REPARTITION(1): the final ORDER BY sorts in one partition, with
+    # no range-sampling job (see queries/_util.py sort_result)
     return starrocks_sql(spark, """
-        SELECT o_orderpriority AS prio,
+        SELECT /*+ REPARTITION(1) */ o_orderpriority AS prio,
                bitmap_count(bitmap_agg(o_custkey)) AS n_cust,
                bitmap_to_string(bitmap_subset_limit(
                    bitmap_agg(o_custkey), 0, 5)) AS first5,

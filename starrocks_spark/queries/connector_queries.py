@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
-from starrocks_spark.queries._util import fixed, sql_fixed
+from starrocks_spark.queries._util import fixed, sort_result, sql_fixed
 from starrocks_spark.sources import connector
 
 
@@ -76,7 +76,7 @@ def connector_duckdb_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(fixed(F.col("s_acctbal"))).cast("double") / 1e4)
             .alias("sum_acctbal"),
         )
-        .orderBy("r_name")
+        .transform(sort_result, "r_name")
     )
 
 
@@ -117,7 +117,7 @@ def connector_duckdb_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.select(
         "o_orderpriority", "n_orders",
         (F.col("total_f").cast("double") / 1e4).alias("total"),
-    ).orderBy("o_orderpriority")
+    ).transform(sort_result, "o_orderpriority")
 
 
 _SINK_SQL = f"""

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.operators import curation
+from starrocks_spark.queries._util import sort_result
 
 QUERIES = {}
 ORACLE = {}
@@ -30,7 +31,7 @@ def pack_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return curation.pack_sequences(
         docs, budget=2048, stream_col="source", order_col="doc_id"
-    ).orderBy("stream", "doc_id")
+    ).transform(sort_result, "stream", "doc_id")
 
 
 ORACLE["pack_token_shards"] = (
@@ -62,7 +63,7 @@ def split_stratified_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("min_id"),
             F.max("doc_id").alias("max_id"),
         )
-        .orderBy("lang", "split")
+        .transform(sort_result, "lang", "split")
     )
 
 
@@ -85,7 +86,7 @@ def quality_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return curation.gopher_repetition(
         docs, n=2, top_frac_max=0.20, min_words=50
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 ORACLE["quality_gopher_repetition"] = (
@@ -173,7 +174,7 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_ip").alias("ips"),
             F.sum("chars_delta").alias("chars_removed"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -223,7 +224,7 @@ def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     eval_df = docs.filter(F.col("doc_id") < 15)
     return curation.ngram_contamination(docs, eval_df, n=8) \
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
 
 
 ORACLE["decontaminate_eval_overlap"] = (
@@ -258,7 +259,7 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_kept"),
             F.sum("doc_id").alias("id_checksum"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -293,7 +294,7 @@ def chunk_overlap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").alias("chunk_tokens"),
             F.sum(hash60(F.col("chunk_text"))).alias("content_sig"),
         )
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.operators import asof_join, retention, sessionize, window_funnel
-from starrocks_spark.queries._util import dsum, lit_frame, sql_dsum
+from starrocks_spark.queries._util import dsum, lit_frame, sort_result, sql_dsum
 
 
 def asof_purchase_view(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -163,8 +163,8 @@ def funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts="ts",
         window_seconds=86400,
     )
-    return levels.groupBy("level").agg(F.count(F.lit(1)).alias("users")).orderBy(
-        "level"
+    return sort_result(
+        levels.groupBy("level").agg(F.count(F.lit(1)).alias("users")), "level"
     )
 
 
@@ -238,7 +238,7 @@ def funnel_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
             df, ["A", "B", "C"], window_seconds=100, mode=m
         ).select(F.lit(m).alias("mode"), "user_id", "level")
         out = lv if out is None else out.unionByName(lv)
-    return out.orderBy("mode", "user_id")
+    return sort_result(out, "mode", "user_id")
 
 
 _FUNNEL_MODES_SQL = "SELECT * FROM (VALUES\n" + ",\n".join(

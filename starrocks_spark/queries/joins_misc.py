@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.operators.in_rewrite import filter_in_values
-from starrocks_spark.queries._util import fixed, lit_frame, sql_fixed
+from starrocks_spark.queries._util import fixed, lit_frame, sort_result, sql_fixed
 
 
 def join_nonequi_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,7 +154,7 @@ def join_or_union_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("o_orderkey").alias("sum_okey"),
             F.countDistinct("c_custkey").alias("n_customers"),
         )
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 
@@ -199,7 +199,7 @@ def star_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(fixed(F.col("l_extendedprice"))).cast("long")
             .alias("rev_f"),
         )
-        .orderBy("p_type")
+        .transform(sort_result, "p_type")
     )
 
 
@@ -252,7 +252,7 @@ def join_colocate_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(fixed(F.col("o_totalprice")).cast("long"))
             .alias("revenue_f"),
         )
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 

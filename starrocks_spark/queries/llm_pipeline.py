@@ -17,7 +17,7 @@ from starrocks_spark.catalog import load_table
 from starrocks_spark.functions import text as T
 from starrocks_spark.functions import vector as V
 from starrocks_spark.operators import dedup, multimodal, similarity
-from starrocks_spark.queries._util import dsum, sql_dsum
+from starrocks_spark.queries._util import dsum, sort_result, sql_dsum
 
 _WORDS = "(" + T.sql_norm_words("text") + ")"
 
@@ -46,7 +46,7 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("stopword_ratio")).alias("sum_stopword_ratio"),
             dsum(F.col("avg_word_len")).alias("sum_avg_word_len"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -87,7 +87,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.col("lang").alias("actual"), pred.alias("predicted"))
         .groupBy("actual", "predicted")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("actual", "predicted")
+        .transform(sort_result, "actual", "predicted")
     )
 
 
@@ -121,7 +121,7 @@ def token_count_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("_ws").alias("ws_tokens"),
             F.sum("_bpe").alias("bpe_tokens"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -240,7 +240,7 @@ def _sql_docs_aug(plant_markers: bool = False,
 def dedup_exact_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(load_table(spark, sf_dir, "documents"),
                            plant_dups=True)
-    return dedup.exact_duplicates(docs).orderBy("fingerprint")
+    return sort_result(dedup.exact_duplicates(docs), "fingerprint")
 
 
 def _sql_dedup_exact() -> str:
@@ -289,7 +289,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(
         docs, jaccard_threshold=0.5,
         pairs_tbl=_sig_pairs(spark, sf_dir, 3),
-    ).orderBy("id_a", "id_b")
+    ).transform(sort_result, "id_a", "id_b")
 
 
 
@@ -343,7 +343,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(
         docs, max_hamming=3,
         pairs_tbl=_sig_pairs(spark, sf_dir, 2),
-    ).orderBy("id_a", "id_b")
+    ).transform(sort_result, "id_a", "id_b")
 
 
 def _sql_dedup_simhash() -> str:
@@ -382,7 +382,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(
         docs, n=2, threshold=0.6, block_cap=1000,
         pairs_tbl=_sig_pairs(spark, sf_dir, 2),
-    ).orderBy("id_a", "id_b")
+    ).transform(sort_result, "id_a", "id_b")
 
 
 def _sql_dedup_ngram_jaccard() -> str:
@@ -436,7 +436,7 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _augmented_embeddings(load_table(spark, sf_dir, "embeddings"))
     return similarity.cosine_dup_pairs(
         emb, threshold=0.9, planes=8, dim=64, block_cap=2000
-    ).orderBy("id_a", "id_b")
+    ).transform(sort_result, "id_a", "id_b")
 
 
 def _sql_embedding_cosine_dups() -> str:
@@ -468,7 +468,7 @@ def ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.brute_force_topk(q, c, k=5)
     return out.select(
         "q_id", F.col("rank").alias("rnk"), "vec_id", "cos_sim"
-    ).orderBy("q_id", "rnk")
+    ).transform(sort_result, "q_id", "rnk")
 
 
 def _sql_ann_brute_force() -> str:
@@ -495,7 +495,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.lsh_bucketed_topk(q, c, k=5, planes=4)
     return out.select(
         "q_id", F.col("rank").alias("rnk"), "vec_id", "cos_sim"
-    ).orderBy("q_id", "rnk")
+    ).transform(sort_result, "q_id", "rnk")
 
 
 def _sql_ann_lsh_bucketed() -> str:
@@ -530,7 +530,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.lsh_bucketed_topk(q, c, k=5, planes=4, probes=2)
     return out.select(
         "q_id", F.col("rank").alias("rnk"), "vec_id", "cos_sim"
-    ).orderBy("q_id", "rnk")
+    ).transform(sort_result, "q_id", "rnk")
 
 
 def _sql_ann_lsh_multiprobe() -> str:
@@ -565,7 +565,7 @@ def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode; see operators/multimodal.py)."""
     docs = load_table(spark, sf_dir, "documents")
     with_bin = multimodal.with_binary_payload(docs)
-    return multimodal.fake_decode_meta(with_bin).orderBy("doc_id")
+    return sort_result(multimodal.fake_decode_meta(with_bin), "doc_id")
 
 
 _MULTIMODAL_SQL = """
@@ -684,7 +684,7 @@ def dedup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("members"),
         )
         .filter(F.col("cluster_size") >= 2)
-        .orderBy("cluster_id")
+        .transform(sort_result, "cluster_id")
     )
 
 
@@ -742,7 +742,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = idx.topk(q, k=5, nprobe=4)
     return out.select(
         "q_id", F.col("rank").alias("rnk"), "vec_id", "cos_sim"
-    ).orderBy("q_id", "rnk")
+    ).transform(sort_result, "q_id", "rnk")
 
 
 def _sql_ann_ivf() -> str:
@@ -805,7 +805,7 @@ def ai_query_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 7 == 0)
     return ai.ai_query(
         docs, "Summarize: {text}"
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 _AI_QUERY_SQL = r"""
@@ -838,7 +838,7 @@ def ai_embed_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = emb.filter(F.col("doc_id") >= 5).select(
         F.col("doc_id").alias("vec_id"), "embedding"
     )
-    return similarity.brute_force_topk(q, c, k=3).orderBy("q_id", "rank")
+    return sort_result(similarity.brute_force_topk(q, c, k=3), "q_id", "rank")
 
 
 def _sql_ai_embed_similarity() -> str:
@@ -926,7 +926,7 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_words").alias("total_words"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -991,7 +991,7 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # fused build+decode: same real RIFF bytes, parsed by the same row
     # decoder, one Python boundary crossing instead of two (guide §4)
-    return multimodal.media_meta(docs, "wav").orderBy("doc_id")
+    return sort_result(multimodal.media_meta(docs, "wav"), "doc_id")
 
 
 _WAV_SQL = """
@@ -1025,7 +1025,7 @@ def multimodal_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         multimodal.media_meta(docs, "ppm")
         .drop("thumb")
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -1077,7 +1077,7 @@ def dedup_boilerplate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_band").alias("band"),
             "block_size", "keeper_id",
         )
-        .orderBy("band")
+        .transform(sort_result, "band")
     )
 
 
@@ -1124,7 +1124,7 @@ def ann_sq8_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), "embedding"
     )
-    return idx.topk(q, k=5).orderBy("q_id", "rank")
+    return sort_result(idx.topk(q, k=5), "q_id", "rank")
 
 
 def _sql_ann_sq8() -> str:
@@ -1208,7 +1208,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     "cos_sim", 5)
     return out.select(
         "q_id", F.col("rank").alias("rnk"), "vec_id", "cos_sim"
-    ).orderBy("q_id", "rnk")
+    ).transform(sort_result, "q_id", "rnk")
 
 
 def _sql_ann_ivf_kmeans() -> str:

@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
-from starrocks_spark.queries._util import fixed, maybe_broadcast, sql_dsum, sql_fixed
+from starrocks_spark.queries._util import (fixed, maybe_broadcast, sort_result,
+                                            sql_dsum, sql_fixed)
 from starrocks_spark.tables.materialized_view import MaterializedView
 
 
@@ -119,7 +120,7 @@ def mv_transparent_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
          "n_orders": ("count", "*")},
     )
     assert cat.last_route and cat.last_route.startswith("mv:"),         cat.last_route
-    return out.orderBy("month")
+    return sort_result(out, "month")
 
 
 _MV_REWRITE_SQL = f"""
@@ -201,7 +202,7 @@ def mv_join_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert cat.last_route == "__base__", cat.last_route
     assert star.last_joined == ["supplier"], star.last_joined
-    return out.orderBy("p_brand")
+    return sort_result(out, "p_brand")
 
 
 _MV_JOIN_SQL = f"""

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from starrocks_spark.catalog import load_table
 from starrocks_spark.functions.geo import st_distance_sphere
 from starrocks_spark.functions.net import inet_aton, inet_ntoa
+from starrocks_spark.queries._util import sort_result
 
 
 def func_conditional_family(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,7 +479,7 @@ def func_money_bytes_format(spark: SparkSession, sf_dir: str) -> DataFrame:
             format_bytes((F.col("o_orderkey") * 7919).cast("long"))
             .alias("bytes_fmt"),
         )
-        .orderBy("o_orderkey")
+        .transform(sort_result, "o_orderkey")
     )
 
 
@@ -518,7 +519,7 @@ def func_conv_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bin(k).alias("bin_str"),
         F.hex(k).alias("hex_str"),
         F.lower(F.hex(F.unhex(F.hex(k)))).alias("unhex_roundtrip"),
-    ).orderBy("s_suppkey")
+    ).transform(sort_result, "s_suppkey")
 
 
 _CONV_SQL = """
@@ -558,7 +559,7 @@ def func_time_slice_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("m7_floor", "m7_ceil", "h2_floor", "w1_ceil")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("m7_floor", "m7_ceil")
+        .transform(sort_result, "m7_floor", "m7_ceil")
     )
 
 
@@ -601,7 +602,7 @@ def func_aes_crypto(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string").alias("roundtrip"),
             F.length(cipher).alias("cipher_len"),
         )
-        .orderBy("c_custkey")
+        .transform(sort_result, "c_custkey")
     )
 
 

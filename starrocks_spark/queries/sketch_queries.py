@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
-from starrocks_spark.queries._util import maybe_broadcast
+from starrocks_spark.queries._util import maybe_broadcast, sort_result
 from starrocks_spark.operators import sketches
 from starrocks_spark.tables.models import ManagedTable, TableModel
 
@@ -93,7 +93,7 @@ def agg_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         sketches.pct_quantile(F.col("state"), 0.5, _W).alias("q50"),
         sketches.pct_quantile(F.col("state"), 0.9, _W).alias("q90"),
         sketches.pct_quantile(F.col("state"), 0.99, _W).alias("q99"),
-    ).orderBy("l_returnflag")
+    ).transform(sort_result, "l_returnflag")
 
 
 _BKT = sketches.sql_pct_bucket("l_extendedprice", _W, _B)
@@ -142,7 +142,7 @@ def agg_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("state").alias("state_size"),
         F.round(sketches.theta_estimate(F.col("state"), k=_K), 4)
         .alias("approx_custkeys"),
-    ).orderBy("o_orderpriority")
+    ).transform(sort_result, "o_orderpriority")
 
 
 # The KMV merge is lossless (global K smallest = K smallest of the
@@ -184,7 +184,7 @@ def agg_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  capacity=64)
         .select("l_returnflag", F.col("item").alias("p_brand"),
                 F.col("cnt").alias("n_items"), "rank")
-        .orderBy("l_returnflag", "rank")
+        .transform(sort_result, "l_returnflag", "rank")
     )
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table, register_tables
-from starrocks_spark.queries._util import fixed, sql_dsum, sql_fixed
+from starrocks_spark.queries._util import fixed, sort_result, sql_dsum, sql_fixed
 from starrocks_spark.sources.files import (
     meta_scan,
     read_files,
@@ -212,8 +212,9 @@ def schema_scan_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by="o_orderpriority",
     )
     t.insert(orders)
-    return schema_partitions(spark, t.path, "o_orderpriority") \
-        .select("partition_value", "n_rows").orderBy("partition_value")
+    parts = schema_partitions(spark, t.path, "o_orderpriority")
+    return sort_result(parts.select("partition_value", "n_rows"),
+                       "partition_value")
 
 
 _SCHEMA_PARTS_SQL = """
@@ -236,7 +237,7 @@ def schema_scan_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return schema_column_stats(
         spark, orders, "infoschema_orders_stats",
         ["o_orderkey", "o_custkey"],
-    ).orderBy("column_name")
+    ).transform(sort_result, "column_name")
 
 
 _SCHEMA_STATS_SQL = """

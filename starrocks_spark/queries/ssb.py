@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
-from starrocks_spark.queries._util import dsum, sql_dsum
+from starrocks_spark.queries._util import dsum, sort_result, sql_dsum
 
 _WAREHOUSE = "/tmp/sr_spark_warehouse"
 
@@ -228,7 +228,7 @@ def _q2(spark: SparkSession, sf_dir: str, pred) -> DataFrame:
         lo.filter(pred)
         .groupBy("d_year", "p_brand")
         .agg(dsum(F.col("lo_revenue")).alias("lo_revenue"))
-        .orderBy("d_year", "p_brand")
+        .transform(sort_result, "d_year", "p_brand")
     )
 
 
@@ -259,8 +259,8 @@ def _q3(spark: SparkSession, sf_dir: str, pred, c_geo: str,
         lo.filter(pred)
         .groupBy(c_geo, s_geo, "d_year")
         .agg(dsum(F.col("lo_revenue")).alias("lo_revenue"))
-        .orderBy(F.col("d_year").asc(), F.col("lo_revenue").desc(),
-                 c_geo, s_geo)
+        .transform(sort_result, F.col("d_year").asc(),
+                   F.col("lo_revenue").desc(), c_geo, s_geo)
     )
 
 
@@ -306,7 +306,7 @@ def _q4(spark: SparkSession, sf_dir: str, pred, *group_cols) -> DataFrame:
         .groupBy(*group_cols)
         .agg((dsum(F.col("lo_revenue")) - dsum(F.col("lo_supplycost")))
              .alias("profit"))
-        .orderBy(*group_cols)
+        .transform(sort_result, *group_cols)
     )
 
 

@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
-from starrocks_spark.queries._util import dsum, maybe_broadcast, sql_dsum
+from starrocks_spark.queries._util import (dsum, maybe_broadcast, sort_result,
+                                            sql_dsum)
 from starrocks_spark.scratch import scratch_root
 from starrocks_spark.streaming.ingest import (
     read_events_stream,
@@ -269,7 +270,7 @@ def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_pairs"),
             F.max("view_id").alias("max_view_id"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -333,7 +334,7 @@ def stream_lakehouse_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long"))
             .cast("long").alias("value_f"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
-from starrocks_spark.queries._util import dsum, sql_dsum
+from starrocks_spark.queries._util import dsum, sort_result, sql_dsum
 
 
 def explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,7 +115,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("k").alias("k_min"),
             F.max("k").alias("k_max"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 

@@ -23,7 +23,8 @@ from datetime import date
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.scratch import scratch_root
-from starrocks_spark.queries._util import dsum, fixed, sql_dsum, sql_fixed
+from starrocks_spark.queries._util import (dsum, fixed, sort_result, sql_dsum,
+                                            sql_fixed)
 from starrocks_spark.tables.models import ManagedTable, TableModel
 from starrocks_spark.tables.partitioning import RangePartitioning
 
@@ -277,7 +278,7 @@ def table_range_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.count_distinct("event_date").alias("n_days"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -426,7 +427,7 @@ def table_rollup_autoselect(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sum_value").cast("double") / F.lit(_SCALE))
         .alias("sum_value"),
         "n_events",
-    ).orderBy("event_type")
+    ).transform(sort_result, "event_type")
 
 
 _ROLLUP_SQL = f"""
@@ -593,7 +594,7 @@ def table_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select(F.lit("__V0_ALL__").alias("o_orderpriority"),
                      "n_rows", "total_price")
         )
-        .orderBy("o_orderpriority")
+        .transform(sort_result, "o_orderpriority")
     )
 
 
@@ -653,8 +654,9 @@ def schema_scan_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "o_orderkey",
     )
-    return snapshot_history(spark, t) \
-        .select("version", "operation", "n_rows").orderBy("version")
+    return sort_result(
+        snapshot_history(spark, t).select("version", "operation", "n_rows"),
+        "version")
 
 
 _HISTORY_SQL = """

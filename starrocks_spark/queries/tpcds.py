@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import (
     dsum, fixed, sql_dec2dbl, sql_dsum, sql_fixed, maybe_broadcast,
+    sort_result,
 )
 
 QUERIES: dict = {}
@@ -128,7 +129,7 @@ def tpcds_q5_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("channel"), F.lit("ALL")).alias("channel"),
             "sales_amt", "returns_amt", "profit",
         )
-        .orderBy("channel")
+        .transform(sort_result, "channel")
     )
 
 
@@ -177,7 +178,7 @@ def tpcds_q11_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         j.filter((F.col("s95") > 0) & (F.col("w95") > 0))
         .filter(F.col("w96") / F.col("w95") > F.col("s96") / F.col("s95"))
         .select("o_custkey", "s95", "s96", "w95", "w96")
-        .orderBy("o_custkey")
+        .transform(sort_result, "o_custkey")
     )
 
 
@@ -229,7 +230,7 @@ def tpcds_q21_before_after(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("qty_after") / F.col("qty_before") >= 2.0 / 3.0)
             & (F.col("qty_after") / F.col("qty_before") <= 3.0 / 2.0)
         )
-        .orderBy("l_partkey")
+        .transform(sort_result, "l_partkey")
     )
 
 
@@ -272,7 +273,7 @@ def tpcds_q34_basket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(maybe_broadcast(cust),
               orders["o_custkey"] == cust["c_custkey"])
         .select("c_custkey", "c_name", "o_orderkey", "item_cnt")
-        .orderBy("c_custkey", "o_orderkey")
+        .transform(sort_result, "c_custkey", "o_orderkey")
     )
 
 
@@ -325,7 +326,7 @@ def tpcds_q36_margin_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         agg.withColumn("rk", F.rank().over(w))
         .select("p_brand", "p_type", "lochierarchy", "margin", "rk")
-        .orderBy(
+        .transform(sort_result,
             F.col("lochierarchy").desc(),
             F.col("p_brand").asc_nulls_last(),
             F.col("p_type").asc_nulls_last(),
@@ -417,7 +418,7 @@ def tpcds_q45_or_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         j.groupBy("c_nationkey")
         .agg(dsum(F.col("net_price")).alias("web_sales"))
-        .orderBy("c_nationkey")
+        .transform(sort_result, "c_nationkey")
     )
 
 
@@ -466,7 +467,7 @@ def tpcds_q51_cumulative_compare(spark: SparkSession,
     j = store.join(web, ["l_partkey", "mon"], "full_outer")
     return (
         j.filter(F.col("web_cum_fp") > F.col("store_cum_fp"))
-        .orderBy("l_partkey", "mon")
+        .transform(sort_result, "l_partkey", "mon")
     )
 
 
@@ -524,7 +525,7 @@ def tpcds_q59_weekly_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wk", "amt_1995", "amt_1996",
             (F.col("amt_1996") / F.col("amt_1995")).alias("yoy_ratio"),
         )
-        .orderBy("wk")
+        .transform(sort_result, "wk")
     )
 
 
@@ -575,7 +576,7 @@ def tpcds_q67_rollup_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.withColumn("rk", F.rank().over(w))
         .filter(F.col("rk") <= 10)
         .select("p_brand", "mon", "lochierarchy", "sumsales", "rk")
-        .orderBy("lochierarchy", "rk")
+        .transform(sort_result, "lochierarchy", "rk")
     )
 
 
@@ -762,7 +763,7 @@ def tpcds_q10_exists_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(eligible, cust["c_custkey"] == eligible["o_custkey"])
         .groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("c_nationkey")
+        .transform(sort_result, "c_nationkey")
     )
 
 
@@ -806,7 +807,7 @@ def tpcds_q33_union_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         unioned.groupBy("p_brand")
         .agg(dsum(F.col("amt")).alias("total_sales"))
-        .orderBy("p_brand")
+        .transform(sort_result, "p_brand")
     )
 
 
@@ -931,7 +932,7 @@ def tpcds_q64_snowflake(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("net_price")).alias("sales_amt"),
             F.count(F.lit(1)).alias("n_items"),
         )
-        .orderBy("r_name", "n_name", "p_brand")
+        .transform(sort_result, "r_name", "n_name", "p_brand")
     )
 
 
@@ -970,7 +971,7 @@ def tpcds_q54_revenue_buckets(spark: SparkSession,
         per_cust.select(bucket.alias("segment"))
         .groupBy("segment")
         .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("segment")
+        .transform(sort_result, "segment")
     )
 
 
@@ -1081,7 +1082,7 @@ def tpcds_q14_cross_channel(spark: SparkSession,
             F.count(F.lit(1)).alias("n_items"),
             dsum(F.col("amt")).alias("above_avg_sales"),
         )
-        .orderBy("channel")
+        .transform(sort_result, "channel")
     )
 
 
@@ -1137,7 +1138,7 @@ def tpcds_q17_qty_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_item.withColumn("qty_cov", cov)
         .filter(F.col("qty_cov") <= 0.58)
         .select("l_partkey", "n", "qty_cov")
-        .orderBy("l_partkey")
+        .transform(sort_result, "l_partkey")
     )
 
 
@@ -1250,7 +1251,7 @@ def tpcds_q35_demographic_stats(spark: SparkSession,
             F.min("c_acctbal").alias("bal_min"),
             F.max("c_acctbal").alias("bal_max"),
         )
-        .orderBy("c_nationkey")
+        .transform(sort_result, "c_nationkey")
     )
 
 
@@ -1301,7 +1302,7 @@ def tpcds_q76_channel_union_nulls(spark: SparkSession,
             F.count("attr").alias("n_attr"),
             dsum(F.col("net_price")).alias("sales_amt"),
         )
-        .orderBy("channel", "yr")
+        .transform(sort_result, "channel", "yr")
     )
 
 
@@ -1377,7 +1378,7 @@ def tpcds_q66_monthly_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(F.col("yr") == 1997)
         .groupBy("sbucket")
         .agg(*aggs)
-        .orderBy("sbucket")
+        .transform(sort_result, "sbucket")
     )
 
 
@@ -1500,7 +1501,7 @@ def tpcds_q99_delay_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             band("d_61_90", (F.col("delay") > 60) & (F.col("delay") <= 90)),
             band("d_over_90", F.col("delay") > 90),
         )
-        .orderBy("sbucket")
+        .transform(sort_result, "sbucket")
     )
 
 

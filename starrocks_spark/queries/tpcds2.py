@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from starrocks_spark.catalog import load_table, register_tables
 from starrocks_spark.queries._util import (
     davg, dsum, fixed, sql_davg, sql_dec2dbl, sql_dsum, sql_fixed, maybe_broadcast,
+    sort_result,
 )
 from starrocks_spark.queries.tpcds import _SQL_SALES, _sales
 
@@ -571,7 +572,7 @@ def tpcds_q31_nation_growth(spark: SparkSession,
     return (
         g.filter((F.col("web_g1") > F.col("store_g1"))
                  & (F.col("web_g2") > F.col("store_g2")))
-        .orderBy("nationkey")
+        .transform(sort_result, "nationkey")
     )
 
 
@@ -747,7 +748,7 @@ def tpcds_q75_brand_decline(spark: SparkSession,
                 & (F.col("cur_qty") / F.col("prev_qty") < 0.9))
         .select("p_brand", "prev_qty", "cur_qty",
                 (F.col("cur_qty") / F.col("prev_qty")).alias("ratio"))
-        .orderBy("p_brand")
+        .transform(sort_result, "p_brand")
     )
 
 
@@ -806,7 +807,7 @@ def tpcds_q43_weekday_pivot(spark: SparkSession,
              .otherwise(F.lit(0.0))).alias(f"{d}_sales")
         for i, d in enumerate(days)
     ]
-    return j.groupBy("n_name").agg(*aggs).orderBy("n_name")
+    return sort_result(j.groupBy("n_name").agg(*aggs), "n_name")
 
 
 def _q43_oracle() -> str:

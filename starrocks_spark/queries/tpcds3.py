@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import (
     davg, dsum, fixed, lit_frame, sql_davg, sql_dec2dbl, sql_dsum, sql_fixed,
-    maybe_broadcast,
+    maybe_broadcast, sort_result,
 )
 from starrocks_spark.queries.tpcds import _SQL_SALES, _SQL_SALES_CUST, _sales
 
@@ -112,7 +112,7 @@ def tpcds_q2_weekly_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("a.wk") == F.col("b.wk"))
                & (F.col("a.yr") == 1995) & (F.col("b.yr") == 1994))
         .select(F.col("a.wk").alias("wk"), *ratios)
-        .orderBy("wk")
+        .transform(sort_result, "wk")
     )
 
 
@@ -174,7 +174,7 @@ def tpcds_q6_above_avg_price_states(spark: SparkSession,
         .groupBy("n_name")
         .agg(F.count_distinct("c_custkey").alias("cnt"))
         .filter(F.col("cnt") >= 10)
-        .orderBy("cnt", "n_name")
+        .transform(sort_result, "cnt", "n_name")
     )
 
 
@@ -240,7 +240,7 @@ def tpcds_q8_prefix_intersect(spark: SparkSession,
               supp["s_nationkey"] == nation["n_nationkey"])
         .groupBy("n_name")
         .agg(dsum(F.col("net_price")).alias("net_rev"))
-        .orderBy("n_name")
+        .transform(sort_result, "n_name")
     )
 
 
@@ -923,7 +923,7 @@ def tpcds_q85_reason_bands(spark: SparkSession,
         .agg(davg(F.col("l_quantity")).alias("avg_qty"),
              davg(F.col("net_price")).alias("avg_refund"),
              F.count(F.lit(1)).alias("n_returns"))
-        .orderBy("reason")
+        .transform(sort_result, "reason")
     )
 
 

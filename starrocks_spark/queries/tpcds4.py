@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import (
     davg, dsum, fixed, sql_davg, sql_dec2dbl, sql_dsum, sql_fixed, maybe_broadcast,
+    sort_result,
 )
 from starrocks_spark.queries.tpcds import _SQL_SALES, _SQL_SALES_CUST, _sales
 
@@ -87,7 +88,8 @@ def tpcds_q3_brand_year_net(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.join(maybe_broadcast(part), s["l_partkey"] == part["p_partkey"])
         .groupBy(F.year("l_shipdate").alias("yr"), F.col("p_brand"))
         .agg(dsum(F.col("net_price")).alias("net"))
-        .orderBy(F.col("yr"), F.col("net").desc(), F.col("p_brand"))
+        .transform(sort_result,
+                   F.col("yr"), F.col("net").desc(), F.col("p_brand"))
     )
 
 
@@ -125,7 +127,7 @@ def tpcds_q7_demo_avgs(spark: SparkSession, sf_dir: str) -> DataFrame:
              davg(F.col("l_extendedprice")).alias("avg_price"),
              davg(F.col("l_discount")).alias("avg_disc"),
              davg(F.col("net_price")).alias("avg_net"))
-        .orderBy("p_brand")
+        .transform(sort_result, "p_brand")
     )
 
 
@@ -174,7 +176,7 @@ def tpcds_q12_category_share(spark: SparkSession,
             (_dbl(F.col("fx")) / 1e4).alias("itemrev"),
             F.round(_dbl(F.col("fx")) * 100.0
                     / _dbl(F.sum("fx").over(w)), 4).alias("revshare"))
-        .orderBy("p_type", F.col("itemrev").desc(), "p_brand")
+        .transform(sort_result, "p_type", F.col("itemrev").desc(), "p_brand")
     )
 
 
@@ -222,7 +224,7 @@ def tpcds_q15_or_gate_nations(spark: SparkSession,
                 | (F.col("l_extendedprice") > 50000.0))
         .groupBy("n_name")
         .agg(dsum(F.col("net_price")).alias("net"))
-        .orderBy("n_name")
+        .transform(sort_result, "n_name")
     )
 
 
@@ -314,9 +316,9 @@ def tpcds_q27_rollup_item_avgs(spark: SparkSession,
              davg(F.col("net_price")).alias("avg_net"),
              F.grouping("n_name").cast("int").alias("g_nation"),
              F.grouping("p_brand").cast("int").alias("g_brand"))
-        .orderBy(F.col("g_nation"), F.col("g_brand"),
-                 F.col("n_name").asc_nulls_last(),
-                 F.col("p_brand").asc_nulls_last())
+        .transform(sort_result, F.col("g_nation"), F.col("g_brand"),
+                                F.col("n_name").asc_nulls_last(),
+                                F.col("p_brand").asc_nulls_last())
     )
 
 
@@ -368,7 +370,7 @@ def tpcds_q29_resold_quantities(spark: SparkSession,
         .agg(dsum(F.col("l_quantity")).alias("returned_qty"),
              dsum(F.col("r_quantity")).alias("rebought_qty"),
              F.count(F.lit(1)).alias("n_pairs"))
-        .orderBy("p_brand")
+        .transform(sort_result, "p_brand")
     )
 
 
@@ -472,7 +474,7 @@ def tpcds_q50_latency_matrix(spark: SparkSession,
              band("d_91_120",
                   (F.col("lat") > 90) & (F.col("lat") <= 120)),
              band("d_over_120", F.col("lat") > 120))
-        .orderBy("n_name")
+        .transform(sort_result, "n_name")
     )
 
 
@@ -530,7 +532,7 @@ def tpcds_q53_quarter_vs_avg(spark: SparkSession,
         agg.select("mfgr", "yr", "qtr", rev_d.alias("rev"),
                    F.round(rev_d / avg_d, 4).alias("ratio"))
         .filter((F.col("ratio") > 1.1) | (F.col("ratio") < 0.9))
-        .orderBy("mfgr", "yr", "qtr")
+        .transform(sort_result, "mfgr", "yr", "qtr")
     )
 
 
@@ -646,7 +648,7 @@ def tpcds_q57_monthly_outliers(spark: SparkSession,
         F.round(rev / avg_d, 4).alias("ratio"))
     return (
         out.filter((F.col("ratio") > 1.1) | (F.col("ratio") < 0.9))
-        .orderBy("n_name", "yr", "mo")
+        .transform(sort_result, "n_name", "yr", "mo")
     )
 
 

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import (
     davg, dsum, fixed, sql_davg, sql_dec2dbl, sql_dsum, sql_fixed, maybe_broadcast,
+    sort_result,
 )
 from starrocks_spark.queries.tpcds import _SQL_SALES, _SQL_SALES_CUST, _sales
 
@@ -150,7 +151,7 @@ def tpcds_q69_store_only_customers(spark: SparkSession,
               cust["c_custkey"] == F.col("o_custkey"), "left_anti")
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 
@@ -186,7 +187,7 @@ def tpcds_q71_hourly_brand(spark: SparkSession,
         s.join(maybe_broadcast(part), s["l_partkey"] == part["p_partkey"])
         .groupBy("hr", "p_brand")
         .agg(dsum(F.col("net_price")).alias("net"))
-        .orderBy("hr", F.col("net").desc(), "p_brand")
+        .transform(sort_result, "hr", F.col("net").desc(), "p_brand")
     )
 
 
@@ -357,9 +358,9 @@ def tpcds_q77_sales_returns_outer(spark: SparkSession,
              .alias("profit"),
              F.grouping("channel").cast("int").alias("g_chan"),
              F.grouping("n_name").cast("int").alias("g_nat"))
-        .orderBy("g_chan", "g_nat",
-                 F.col("channel").asc_nulls_last(),
-                 F.col("n_name").asc_nulls_last())
+        .transform(sort_result, "g_chan", "g_nat",
+                                F.col("channel").asc_nulls_last(),
+                                F.col("n_name").asc_nulls_last())
     )
 
 
@@ -462,9 +463,9 @@ def tpcds_q86_web_rollup_rank(spark: SparkSession,
     return (
         agg.withColumn("rk", F.rank().over(w).cast("int"))
         .select("p_type", "p_brand", "lochierarchy", "net", "rk")
-        .orderBy(F.col("lochierarchy").desc(),
-                 F.col("p_type").asc_nulls_last(),
-                 F.col("p_brand").asc_nulls_last())
+        .transform(sort_result, F.col("lochierarchy").desc(),
+                                F.col("p_type").asc_nulls_last(),
+                                F.col("p_brand").asc_nulls_last())
     )
 
 
@@ -550,7 +551,7 @@ def tpcds_q91_monthly_return_loss(spark: SparkSession,
                  F.col("c_mktsegment"))
         .agg(dsum(F.col("net_price")).alias("loss"),
              F.count(F.lit(1)).alias("n_returns"))
-        .orderBy(F.col("loss").desc(), "mo", "c_mktsegment")
+        .transform(sort_result, F.col("loss").desc(), "mo", "c_mktsegment")
     )
 
 

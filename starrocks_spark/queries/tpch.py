@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import (DEC, davg, dsum, maybe_broadcast,
-                                            sql_davg, sql_dsum)
+                                            sort_result, sql_davg, sql_dsum)
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,7 +41,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg(F.col("l_discount")).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(sort_result, "l_returnflag", "l_linestatus")
     )
 
 
@@ -131,7 +131,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_name") == "ASIA")
         .groupBy("n_name")
         .agg(dsum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
+        .transform(sort_result, F.desc("revenue"), "n_name")
     )
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from starrocks_spark.catalog import load_table
 from starrocks_spark.queries._util import (DEC, davg, dsum, fixed,
                                             maybe_broadcast, sql_dsum,
-                                            sql_fixed)
+                                            sort_result, sql_fixed)
 
 def _rev():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -65,7 +65,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("p_partkey", "p_name", "s_name", "n_name")
         .agg(F.min("min_unit").alias("min_unit_price"))
-        .orderBy("p_partkey", "s_name")
+        .transform(sort_result, "p_partkey", "s_name")
     )
 
 
@@ -103,7 +103,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(late, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
+        .transform(sort_result, "o_orderpriority")
     )
 
 
@@ -144,7 +144,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(dsum(_rev()).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        .transform(sort_result, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -190,7 +190,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(maybe_broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg((dsum(target) / dsum(_rev())).alias("mkt_share"))
-        .orderBy("o_year")
+        .transform(sort_result, "o_year")
     )
 
 
@@ -228,7 +228,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
         .agg(dsum(profit).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
+        .transform(sort_result, "nation", F.desc("o_year"))
     )
 
 
@@ -266,7 +266,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").alias("p_partkey"),
             (F.col("_fp").cast("double") / F.lit(10000.0)).alias("part_value"),
         )
-        .orderBy(F.desc("part_value"), "p_partkey")
+        .transform(sort_result, F.desc("part_value"), "p_partkey")
     )
 
 
@@ -304,7 +304,7 @@ def q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(high).alias("high_line_count"),
             F.sum(1 - high).alias("low_line_count"),
         )
-        .orderBy("l_linestatus")
+        .transform(sort_result, "l_linestatus")
     )
 
 
@@ -338,7 +338,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
+        .transform(sort_result, F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -368,7 +368,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("total_revenue") == F.col("_max"))
         .join(maybe_broadcast(supp), F.col("supplier_no") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
+        .transform(sort_result, "s_suppkey")
     )
 
 
@@ -406,7 +406,8 @@ def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
+        .transform(sort_result, F.desc("supplier_cnt"),
+                   "p_brand", "p_type", "p_size")
     )
 
 
@@ -480,7 +481,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
                   "left_semi")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_name", "n_name")
-        .orderBy("s_name")
+        .transform(sort_result, "s_name")
     )
 
 
@@ -532,7 +533,7 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("s_name")
         .agg(F.countDistinct("l_orderkey").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
+        .transform(sort_result, F.desc("numwait"), "s_name")
     )
 
 
@@ -577,7 +578,7 @@ def q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("numcust"),
             dsum(F.col("c_acctbal")).alias("totacctbal"),
         )
-        .orderBy("cntrycode")
+        .transform(sort_result, "cntrycode")
     )
 
 

@@ -24,6 +24,7 @@ copy-on-write compaction, which is the same logical plan.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import tempfile
@@ -32,9 +33,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from starrocks_spark.scratch import scratch_root
+
+_log = logging.getLogger(__name__)
+
 # Spark's file stream source watches a *directory* (new file = new data,
 # like new Kafka offsets). The testdata tables are single parquet files,
-# so stage each behind a symlink in a per-source temp dir.
+# so stage each behind a symlink in a per-source dir under the process
+# scratch root, which its atexit hook removes.
 _STAGE_DIRS: dict[str, str] = {}
 
 
@@ -55,7 +61,8 @@ def _ts_to_timestamp(stream: DataFrame) -> DataFrame:
 def _staged_dir(parquet_file: str) -> str:
     stage = _STAGE_DIRS.get(parquet_file)
     if stage is None or not os.path.isdir(stage):
-        stage = tempfile.mkdtemp(prefix="sr_spark_stream_src_")
+        stage = tempfile.mkdtemp(prefix="sr_spark_stream_src_",
+                                 dir=scratch_root())
         os.symlink(parquet_file, os.path.join(stage, os.path.basename(parquet_file)))
         _STAGE_DIRS[parquet_file] = stage
     return stage
@@ -92,7 +99,8 @@ def read_events_stream_split(spark: SparkSession, sf_dir: str,
     split_dir = _SPLIT_DIRS.get(key)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if split_dir is None or not os.path.isdir(split_dir):
-        split_dir = tempfile.mkdtemp(prefix="sr_spark_stream_split_")
+        split_dir = tempfile.mkdtemp(prefix="sr_spark_stream_split_",
+                                     dir=scratch_root())
         spark.read.parquet(f"{sf_dir}/events.parquet") \
             .repartition(n_splits).write.mode("overwrite").parquet(split_dir)
         _SPLIT_DIRS[key] = split_dir
@@ -103,6 +111,26 @@ def read_events_stream_split(spark: SparkSession, sf_dir: str,
         .parquet(split_dir)
     )
     return _ts_to_timestamp(stream)
+
+
+def _local_bytes(path: str) -> int | None:
+    """On-disk bytes of a local table path: the file's size, or the sum
+    of the data files under a directory (Spark's hidden ``_*``/``.*``
+    entries excluded). None when nothing exists at ``path``."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    if not os.path.isdir(path):
+        return None
+    total = 0
+    for d, dirs, names in os.walk(path, onerror=_reraise):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        total += sum(os.path.getsize(os.path.join(d, n))
+                     for n in names if not n.startswith(("_", ".")))
+    return total
+
+
+def _reraise(err: OSError) -> None:
+    raise err
 
 
 def state_partitions_for(spark: SparkSession, sf_dir: str,
@@ -123,13 +151,18 @@ def state_partitions_for(spark: SparkSession, sf_dir: str,
     via SPARK_GRAFT_STATE_STORE_BYTES), clamped to the cluster's
     parallelism. At sf0.1 (2 MB events) every streaming query gets 1
     store; a 100 TB source gets bytes/100 MB stores capped at the
-    core count."""
+    core count.
+
+    A directory-backed table is sized by its part files. A path that
+    cannot be sized locally (missing, or a remote URI) is logged and
+    gets the 1-store floor."""
     per_store = int(os.environ.get("SPARK_GRAFT_STATE_STORE_BYTES",
                                    str(100 << 20)))
-    try:
-        raw = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        raw = 0
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    raw = _local_bytes(path)
+    if raw is None:
+        _log.warning("cannot size %s locally; using 1 state store", path)
+        return 1
     est_state = raw * 4.0 * state_fraction  # parquet→row decompression
     n = max(1, -(-int(est_state) // per_store))  # ceil div
     return min(n, spark.sparkContext.defaultParallelism)

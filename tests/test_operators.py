@@ -191,6 +191,32 @@ def test_lit_frame_nullable_int_roundtrip(spark):
     assert "LocalTableScan" in plan
 
 
+def test_sort_result_orders_mixed_keys_with_ties_and_nulls(spark):
+    """sort_result returns rows in ORDER BY order for mixed asc/desc
+    keys with ties and NULLs (the oracle comparison ignores row order,
+    so order is checked here), sorted in one partition with no
+    range-sampling exchange."""
+    from starrocks_spark.queries._util import sort_result
+
+    rows = [(2, 1.0, "b"), (None, 3.0, "a"), (1, None, "c"),
+            (2, 1.0, "a"), (1, 5.0, None), (None, None, "d"),
+            (2, 7.0, "z"), (1, 5.0, "a"), (3, None, None)]
+    df = spark.createDataFrame(rows, "k int, v double, s string") \
+        .repartition(3)
+    out = sort_result(df, F.col("k").asc_nulls_last(), F.desc("v"), "s")
+
+    def key(r):
+        k, v, s = r
+        # asc NULLS LAST, desc (NULLS LAST), asc (NULLS FIRST)
+        return (k is None, k or 0, v is None, -(v or 0), s is not None,
+                s or "")
+
+    assert [tuple(r) for r in out.collect()] == sorted(rows, key=key)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SinglePartition" in plan
+    assert "rangepartitioning" not in plan
+
+
 def test_with_quality_features_matches_inline(spark):
     """The materialized-words variant must produce exactly the inline
     quality_features values (same expression shapes, one norm_words

@@ -5,9 +5,14 @@ data file. Also checks version semantics and replay safety of the
 merge path itself (batch-level, no stream needed — foreachBatch
 calls exactly this function)."""
 
+import logging
+import os
+
 from pyspark.sql import functions as F
 
-from starrocks_spark.streaming.ingest import _merge_batch
+from starrocks_spark.scratch import scratch_root
+from starrocks_spark.streaming import ingest
+from starrocks_spark.streaming.ingest import _merge_batch, state_partitions_for
 from starrocks_spark.tables.lakehouse import SnapshotTable
 
 
@@ -71,3 +76,47 @@ def test_stale_batch_row_is_ignored_and_replay_safe(spark, tmp_path):
     assert t.read(version=v1).filter(
         F.col("user_id") == 7
     ).collect()[0]["event_type"] == "init"
+
+
+def test_stream_source_dirs_live_under_scratch_root(spark, sf_dir):
+    """Both stream-source staging paths are created under the process
+    scratch root, whose atexit hook removes them."""
+    ingest.read_events_stream(spark, sf_dir)
+    ingest.read_events_stream_split(spark, sf_dir, n_splits=2)
+    root = scratch_root()
+    staged = ingest._STAGE_DIRS[f"{sf_dir}/events.parquet"]
+    split = ingest._SPLIT_DIRS[(sf_dir, 2)]
+    for d in (staged, split):
+        assert os.path.commonpath([root, d]) == root, d
+
+
+def test_state_partitions_sum_directory_part_files(spark, tmp_path,
+                                                    monkeypatch):
+    """A directory-backed table (the x10 corpus layout: part files
+    under <table>.parquet/) is sized by its data files, not by the
+    directory entry; Spark's hidden _SUCCESS/.crc files do not count."""
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    for i in range(3):
+        (table / f"part-{i:05d}.parquet").write_bytes(b"x" * 1000)
+    (table / "_SUCCESS").write_bytes(b"x" * 100_000)
+    (table / ".part-00000.parquet.crc").write_bytes(b"x" * 100_000)
+    # 3000 data bytes x 4 (decompression factor) / 6000 per store = 2
+    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE_BYTES", "6000")
+    expected = min(2, spark.sparkContext.defaultParallelism)
+    assert state_partitions_for(spark, str(tmp_path)) == expected
+
+
+def test_state_partitions_single_file_corpus_gets_one_store(spark, sf_dir):
+    assert state_partitions_for(spark, sf_dir) == 1
+
+
+def test_state_partitions_unresolvable_path_is_logged(spark, tmp_path,
+                                                      caplog):
+    """A missing or remote path falls back to the 1-store floor, and
+    says so in the log instead of silently sizing it as 0 bytes."""
+    for sf in (str(tmp_path / "missing"), "s3a://bucket/corpus"):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger=ingest.__name__):
+            assert state_partitions_for(spark, sf) == 1
+        assert f"{sf}/events.parquet" in caplog.text
